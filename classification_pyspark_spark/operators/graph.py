@@ -141,8 +141,9 @@ def connected_components(
             # canonicalization-sensitive and does not reliably fire
             # for the aliased lookup projection), doubling the
             # round's edge-frame work. The persist is lazy — zero
-            # extra jobs — and the broadcast build of the lookup side
-            # populates the cache before the probe side reads it.
+            # extra jobs. The cache fills first only under a broadcast
+            # plan (the lookup side's build runs before the probe);
+            # a shuffled join may compute both sides from lineage.
             round_persist = upd = upd.persist()
             lk = upd.select(
                 F.col("vertex").alias("__cv"), F.col("component").alias("__cc")

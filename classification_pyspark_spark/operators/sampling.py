@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import AtomicType
 
 
 def random_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
@@ -60,13 +61,20 @@ def train_test_split(
 def stratified_split(
     df: DataFrame, target_col: str, test_ratio: float = 0.3, seed: int = 42
 ) -> tuple[DataFrame, DataFrame]:
-    """Per-class random split, unioned back (parity: ``dp.py:980-994``).
+    """Seeded hash split, one pass (parity: ``dp.py:980-994``).
 
-    Works for any number of classes (the reference hard-codes {0,1});
-    implemented with a seeded per-row uniform draw so it is one pass,
-    no per-class jobs, and deterministic under a fixed seed.
+    Each row's uniform draw is a seeded xxhash64 of its atomic-typed
+    columns (vector and other complex columns are left out), so the
+    split is a pure function of the row values: the same rows land on
+    the same sides whatever their order or partitioning, and identical
+    rows always land on the same side. Class ratios (any number of
+    classes; the reference hard-codes {0,1}) are preserved in
+    expectation only — no per-class quota, no per-class jobs.
     """
-    tagged = df.withColumn("__u", F.rand(seed))
+    atomic = [F.col(f.name) for f in df.schema.fields if isinstance(f.dataType, AtomicType)]
+    h = F.xxhash64(F.lit(seed), *atomic)
+    # top 53 bits of the hash -> a double uniform in [0, 1)
+    tagged = df.withColumn("__u", F.shiftrightunsigned(h, 11).cast("double") / float(1 << 53))
     train = tagged.filter(F.col("__u") >= test_ratio).drop("__u")
     test = tagged.filter(F.col("__u") < test_ratio).drop("__u")
     return train, test

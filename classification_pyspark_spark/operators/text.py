@@ -125,6 +125,29 @@ def punct_ratio_expr(col: Column | str) -> Column:
     return F.length(stripped) / F.greatest(F.length(c), F.lit(1))
 
 
+def gopher_rules() -> dict[str, Column]:
+    """Gopher-style quality rules over stats a first projection put in
+    ``__ws`` (``ws_token_stats_expr``), ``__al``
+    (``alnum_token_stats_expr``) and ``__punct`` (``punct_ratio_expr``)
+    — read from columns because the HOF folds get no CSE. Returns
+    ``wc_ok`` (50-100000 words), ``mwl_ok`` (mean word length 3-10),
+    ``stop_ok`` (>= 2 stopwords), ``punct_ok`` (ratio <= 0.1) and their
+    conjunction ``passes_gopher``."""
+    mwl = F.when(
+        F.col("__al.n") > 0, F.col("__al.len") / F.col("__al.n").cast("double")
+    ).otherwise(F.lit(0.0))
+    rules = {
+        "wc_ok": F.col("__ws.n").between(50, 100000),
+        "mwl_ok": mwl.between(3.0, 10.0),
+        "stop_ok": F.col("__ws.stop") >= 2,
+        "punct_ok": F.col("__punct") <= 0.1,
+    }
+    rules["passes_gopher"] = (
+        rules["wc_ok"] & rules["mwl_ok"] & rules["stop_ok"] & rules["punct_ok"]
+    )
+    return rules
+
+
 def quality_score_expr(col: Column | str, round_to: int = 8) -> Column:
     """Deterministic document quality score in [0, 1]:
     0.4 * token-length factor (saturating at 100 tokens)

@@ -168,6 +168,10 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
     the sink) and ``n_dropped_cut`` (docs removed because the cut
     left nothing). Same primitives as the ``substring_dedup_rewrite``
     / ``corpus_curation_surgical`` registry queries.
+
+    The report is ONE ``operators.funnel.tagged_funnel`` aggregate over
+    the flagged corpus (plus, when cutting, the written sink and the
+    zero-kept survivors), the helper the registry funnels report with.
     """
     from pyspark.sql import Window
 
@@ -187,7 +191,9 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
         quality_score_expr("text").alias("__q"),
         F.md5("text").alias("__digest"),
     )
-    kept = flagged.filter((F.col("__lg") == F.col("lang")) & (F.col("__q") >= min_quality))
+    lang_ok = F.col("__lg") == F.col("lang")
+    passed_lq = lang_ok & (F.col("__q") >= min_quality)
+    kept = flagged.filter(passed_lq)
     scores = None
     if max_ppl is not None:
         # LM-perplexity gate (CCNet-style): score against the corpus
@@ -283,6 +289,8 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
     # minhash pair join a second time just for the status message
     n = spark.read.parquet(out).count()
     if report_out:
+        from .operators.funnel import tagged_funnel
+
         if max_ppl is not None:
             # attribute perplexity-gate drops too: docs that passed the
             # lang + quality filters but scored keep=0
@@ -291,71 +299,72 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
             )
         else:
             rep_src = flagged.withColumn("__ppl_keep", F.lit(1))
-        passed_lq = (F.col("__lg") == F.col("lang")) & (F.col("__q") >= min_quality)
-        report = (
-            rep_src.groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum(F.when(F.col("__lg") != F.col("lang"), 1).otherwise(0))
-                .cast("long")
-                .alias("n_dropped_lang"),
-                F.sum(
-                    F.when(
-                        (F.col("__lg") == F.col("lang")) & (F.col("__q") < min_quality), 1
-                    ).otherwise(0)
-                )
-                .cast("long")
-                .alias("n_dropped_quality"),
-                F.sum(F.when(passed_lq & (F.coalesce("__ppl_keep", F.lit(0)) == 0), 1).otherwise(0))
-                .cast("long")
-                .alias("n_dropped_ppl"),
+        ppl_drop = F.coalesce("__ppl_keep", F.lit(0)) == 0
+        stages = [
+            (
+                0,
+                rep_src,
+                {
+                    "v2": F.when(~lang_ok, 1).otherwise(0),
+                    "v3": F.when(lang_ok & (F.col("__q") < min_quality), 1).otherwise(0),
+                    "v4": F.when(passed_lq & ppl_drop, 1).otherwise(0),
+                },
             )
-        )
+        ]
+        outputs = [
+            ("n_docs", 0, "v1"),
+            ("n_dropped_lang", 0, "v2"),
+            ("n_dropped_quality", 0, "v3"),
+            ("n_dropped_ppl", 0, "v4"),
+        ]
         if cut_spans:
             from .operators.text import punct_tokens_expr
 
-            # per-source cut totals of WRITTEN survivors from the sink
-            # files (cheap re-read, same reason as the count above) ...
+            # cut totals of WRITTEN survivors from the sink files (cheap
+            # re-read, same reason as the count above) ...
             written = spark.read.parquet(out).select("doc_id", "source", "tokens_cut")
-            kept_cuts = written.groupBy("source").agg(
-                F.sum("tokens_cut").cast("long").alias("__cut_kept")
-            )
             # ... plus the zero-kept docs (ADVICE r8: dropped-to-nothing
             # docs appeared in no n_dropped_* column and their tokens
             # were missing from tokens_cut, so the funnel didn't tie
             # out). They are exactly the survivors absent from the sink;
             # their cut size is their FULL token count — an anti-join on
             # the persisted survivor frame, never a span-detection rerun.
-            zero_kept = (
-                surv.join(written.select("doc_id"), "doc_id", "left_anti")
-                .groupBy("source")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_dropped_cut"),
-                    F.sum(F.size(punct_tokens_expr(F.col("text"))))
-                    .cast("long")
-                    .alias("__cut_dropped"),
-                )
-            )
-            report = (
-                report.join(kept_cuts, "source", "left")
-                .join(zero_kept, "source", "left")
-                .withColumn("n_dropped_cut", F.coalesce("n_dropped_cut", F.lit(0).cast("long")))
-                .withColumn(
-                    "tokens_cut",
-                    (
-                        F.coalesce("__cut_kept", F.lit(0).cast("long"))
-                        + F.coalesce("__cut_dropped", F.lit(0).cast("long"))
-                    ).cast("long"),
-                )
-                .drop("__cut_kept", "__cut_dropped")
-            )
-        report.write.mode("overwrite").parquet(report_out)
+            zero_kept = surv.join(written.select("doc_id"), "doc_id", "left_anti")
+            stages += [
+                (1, written, {"v1": F.lit(0), "v2": F.col("tokens_cut")}),
+                (1, zero_kept, {"v2": F.size(punct_tokens_expr(F.col("text")))}),
+            ]
+            outputs += [("n_dropped_cut", 1, "v1"), ("tokens_cut", 1, "v2")]
+        tagged_funnel(stages, outputs).write.mode("overwrite").parquet(report_out)
     exact.unpersist()
     if surv is not None:
         surv.unpersist()
     if scores is not None:
         scores.unpersist()
     return TaskStatus(True, f"{n} curated docs")
+
+
+def _drain_landing(spark: SparkSession, params: dict, ingest, **kw):
+    """Drain the landing zone (``params['landing']``, up to
+    ``max_files_per_trigger`` files per trigger, default 8) through
+    ``ingest(stream, sink, index, checkpoint, **kw)``; return the sink
+    corpus and its row count, ``(None, 0)`` when no batch ever wrote
+    the sink (empty landing zone)."""
+    from pyspark.errors import AnalysisException
+
+    from .streaming.corpus import read_corpus, read_documents_stream
+
+    stream = read_documents_stream(
+        spark,
+        params["landing"],
+        max_files_per_trigger=int(params.get("max_files_per_trigger", 8)),
+    )
+    ingest(stream, params["sink"], params["index"], params["checkpoint"], **kw)
+    try:
+        corpus = read_corpus(spark, params["sink"])
+        return corpus, corpus.count()
+    except AnalysisException:
+        return None, 0
 
 
 @register_processor("corpus-ingest", "ingest-documents")
@@ -367,23 +376,10 @@ def ingest_documents_job(spark: SparkSession, params: dict) -> TaskStatus:
     ingested files and the digest index rejects already-seen texts,
     so an hourly cadence costs O(new files), never O(corpus). See
     ``streaming/corpus.py`` for the effectively-once mechanics."""
-    from .streaming.corpus import ingest_documents, read_corpus, read_documents_stream
+    from .streaming.corpus import ingest_documents
 
-    landing = params["landing"]
-    sink = params["sink"]
-    index = params["index"]
-    checkpoint = params["checkpoint"]
-    stream = read_documents_stream(
-        spark, landing, max_files_per_trigger=int(params.get("max_files_per_trigger", 8))
-    )
-    ingest_documents(stream, sink, index, checkpoint)
-    from pyspark.errors import AnalysisException
-
-    try:
-        n = read_corpus(spark, sink).count()
-    except AnalysisException:  # empty landing zone: no batch ever wrote the sink
-        n = 0
-    return TaskStatus(True, f"corpus at {sink}: {n} unique documents")
+    _, n = _drain_landing(spark, params, ingest_documents)
+    return TaskStatus(True, f"corpus at {params['sink']}: {n} unique documents")
 
 
 @register_processor("corpus-ingest", "ingest-documents-neardup")
@@ -395,32 +391,16 @@ def ingest_documents_neardup_job(spark: SparkSession, params: dict) -> TaskStatu
     index. Params: landing/sink/index/checkpoint (+ optional
     rows_per_band, n_hashes, engine — defaults are the production
     H=16/r=8 universal banding)."""
-    from .streaming.corpus import (
-        ingest_documents_neardup,
-        read_corpus,
-        read_documents_stream,
-    )
+    from .streaming.corpus import ingest_documents_neardup
 
-    stream = read_documents_stream(
+    _, n = _drain_landing(
         spark,
-        params["landing"],
-        max_files_per_trigger=int(params.get("max_files_per_trigger", 8)),
-    )
-    ingest_documents_neardup(
-        stream,
-        params["sink"],
-        params["index"],
-        params["checkpoint"],
+        params,
+        ingest_documents_neardup,
         rows_per_band=int(params.get("rows_per_band", 8)),
         n_hashes=int(params.get("n_hashes", 16)),
         engine=params.get("engine", "universal"),
     )
-    from pyspark.errors import AnalysisException
-
-    try:
-        n = read_corpus(spark, params["sink"]).count()
-    except AnalysisException:  # empty landing zone
-        n = 0
     return TaskStatus(True, f"near-dup-deduped corpus at {params['sink']}: {n} documents")
 
 
@@ -435,33 +415,16 @@ def ingest_documents_cutspans_job(spark: SparkSession, params: dict) -> TaskStat
     nothing are dropped, and every sink row carries ``tokens_cut``.
     Params: landing/sink/index/checkpoint (+ optional span_n /
     min_span, defaults 10/50 — the registry/production cut knobs)."""
-    from .streaming.corpus import (
-        ingest_documents_cutspans,
-        read_corpus,
-        read_documents_stream,
-    )
+    from .streaming.corpus import ingest_documents_cutspans
 
-    stream = read_documents_stream(
+    corpus, n = _drain_landing(
         spark,
-        params["landing"],
-        max_files_per_trigger=int(params.get("max_files_per_trigger", 8)),
-    )
-    ingest_documents_cutspans(
-        stream,
-        params["sink"],
-        params["index"],
-        params["checkpoint"],
+        params,
+        ingest_documents_cutspans,
         n=int(params.get("span_n", 10)),
         min_span=int(params.get("min_span", 50)),
     )
-    from pyspark.errors import AnalysisException
-
-    try:
-        corpus = read_corpus(spark, params["sink"])
-        n = corpus.count()
-        cut = corpus.agg(F.sum("tokens_cut")).first()[0] or 0
-    except AnalysisException:  # empty landing zone
-        n, cut = 0, 0
+    cut = 0 if corpus is None else corpus.agg(F.sum("tokens_cut")).first()[0] or 0
     return TaskStatus(
         True, f"span-cut corpus at {params['sink']}: {n} documents, {cut} tokens cut"
     )

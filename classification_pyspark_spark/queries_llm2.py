@@ -25,7 +25,9 @@ production skew safety (oracle queries run exact).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import load_table, spread_for_compute
@@ -814,42 +816,38 @@ _CURATION_FULL_SQL = r"""
 """
 
 
-@query("corpus_curation_full", sql=_CURATION_FULL_SQL)
-def corpus_curation_full(
-    spark: SparkSession, sf_dir: str, max_bucket_size: int | None = None
-) -> DataFrame:
-    """THE end-to-end curation benchmark: langid -> Gopher rules ->
-    bigram-LM perplexity -> exact dedup -> minhash near-dup (banded
-    LSH + connected components) -> eval-set decontamination ->
-    2048-token sequence packing, composed as ONE dataflow and reported
-    as the per-source funnel (every stage's drop count, kept docs,
-    kept tokens, packs spanned) — the first number a pretraining-
-    pipeline user asks for. The production twin is
-    ``production.curate_documents``; this registry form is fully
-    DuckDB-replayable, including the recursive-CTE connected
-    components and the md5 minhash bands.
+class _Front(NamedTuple):
+    """The frames ``_curation_front`` hands to each curation query."""
 
-    Determinism scaffolding (test-scale honesty, same pattern as
-    ``corpus_curation``): the corpus is the md5-hash TRAIN split plus
-    injected exact duplicates (every 40th train doc under +1e6 ids —
-    the exact-dedup stage provably fires) plus injected eval clones
-    (every 3rd test doc under +2e6 ids — the decontamination stage
-    provably fires: their 5-gram overlap with the eval set is 1.0).
+    split: DataFrame  # the source documents, tagged with __split
+    flags: DataFrame  # per corpus doc: lang_ok, gopher_ok, ppl_ok
+    lq: DataFrame  # docs passing all three gates; rn = rank in digest
+    exact: DataFrame  # exact-dedup survivors
+    losers: DataFrame  # near-dup component non-roots (doc_id)
+    nd: DataFrame  # near-dup survivors
 
-    Scale shape (r10 form): the corpus is built in ONE pass (each doc
-    explodes into its 0-2 injected copies — one scan, no per-branch
-    re-evaluation); the corpus-heavy work is ONE flags projection
-    (fused token-stat folds, persisted — consumed by the funnel
-    aggregate and the survivor pipeline), the LM count tables
-    (vocabulary-bounded unigrams, AQE-skew-safe bigram counting), the
-    STAR-form minhash edges on exact survivors (bucket-min edges,
-    O(k) per band bucket — connectivity-identical to the pair join,
-    which this query never outputs), the gram-keyed decontamination
-    join (train grams never pair with docs, only with the DISTINCT
-    eval gram set), a range-partitioned global cumsum for packing,
-    and ONE tagged-union funnel aggregate (no per-stage join fan-in).
-    Every join key is bounded (band buckets / gram vocabulary /
-    dimension-sized source rollups); nothing is pairwise on the corpus.
+
+def _curation_front(
+    spark: SparkSession,
+    sf_dir: str,
+    max_bucket_size: int | None,
+    injections: list[tuple[Column, int, Column]],
+) -> _Front:
+    """The curation front shared by ``corpus_curation_full`` and
+    ``corpus_curation_surgical``: injected corpus -> langid -> Gopher
+    rules -> bigram-LM perplexity -> exact digest dedup -> minhash
+    near-dup connected components.
+
+    The corpus is the md5-hash TRAIN split plus one copy per matching
+    ``(condition, id offset, text)`` injection: ``condition`` is over
+    the split-tagged source row (``__split``), the copy gets ``doc_id +
+    offset`` and ``text``. Built in ONE pass: each doc explodes into
+    its corpus copies instead of a per-copy union branch, which
+    re-evaluated the scan+split PER BRANCH and multiplied the spread
+    partitioning by the branch count (the full funnel's 3 branches:
+    3x32 = 96 map tasks over 4,393 docs at sf0.1; at 100 TB, 3 corpus
+    scans instead of 1). Same
+    multiset of (doc_id, text, source, lang) rows.
     """
     from pyspark.sql import Window
 
@@ -860,37 +858,25 @@ def corpus_curation_full(
     from .operators.text import (
         alnum_token_stats_expr,
         bigram_lm_perplexity,
+        gopher_rules,
         langid_expr,
         punct_ratio_expr,
-        punct_tokens_expr,
-        rolling_gram_hash_sql,
-        ws_tok_sql,
         ws_token_stats_expr,
     )
-    from .operators.windows import global_cumsum
 
     d = spread_for_compute(
         load_table(spark, sf_dir, "documents").select("doc_id", "text", "source", "lang")
     )
     s = d.select("*", hash_split_expr("doc_id").alias("__split"))
-    # one-pass injection (r10): each doc explodes into its 0-2 corpus
-    # copies (train row + every-40th train dup under +1e6 + every-3rd
-    # test clone under +2e6) instead of the old 3-branch union, which
-    # re-evaluated the scan+split PER BRANCH and multiplied the spread
-    # partitioning by the branch count (3x32 = 96 map tasks over 4,393
-    # docs at sf0.1; at 100 TB, 3 corpus scans instead of 1). Same
-    # multiset of (doc_id, text, source, lang) rows.
-    is_tr = F.col("__split") == "train"
     copies = F.array(
-        F.when(is_tr, F.struct(F.col("doc_id"), F.col("text"))),
-        F.when(
-            is_tr & (F.col("doc_id") % 40 == 0),
-            F.struct((F.col("doc_id") + 1000000).alias("doc_id"), F.col("text")),
-        ),
-        F.when(
-            (~is_tr) & (F.col("doc_id") % 3 == 0),
-            F.struct((F.col("doc_id") + 2000000).alias("doc_id"), F.col("text")),
-        ),
+        F.when(F.col("__split") == "train", F.struct(F.col("doc_id"), F.col("text"))),
+        *[
+            F.when(
+                cond,
+                F.struct((F.col("doc_id") + off).alias("doc_id"), text.alias("text")),
+            )
+            for cond, off, text in injections
+        ],
     )
     corpus = track(
         s.select(
@@ -918,15 +904,6 @@ def corpus_curation_full(
         langid_expr("text").alias("__lg"),
         F.md5("text").alias("__digest"),
     )
-    mwl = F.when(
-        F.col("__al.n") > 0, F.col("__al.len") / F.col("__al.n").cast("double")
-    ).otherwise(F.lit(0.0))
-    gopher_ok = (
-        F.col("__ws.n").between(50, 100000)
-        & mwl.between(3.0, 10.0)
-        & (F.col("__ws.stop") >= 2)
-        & (F.col("__punct") <= 0.1)
-    )
     flags = track(
         base.select(
             "doc_id",
@@ -934,7 +911,7 @@ def corpus_curation_full(
             "text",
             "__digest",
             (F.col("__lg") == F.col("lang")).alias("lang_ok"),
-            gopher_ok.alias("gopher_ok"),
+            gopher_rules()["passes_gopher"].alias("gopher_ok"),
         )
         .join(ppl, "doc_id")
         .withColumn("ppl_ok", F.col("keep") == 1)
@@ -947,9 +924,9 @@ def corpus_curation_full(
     # max_bucket_size=None is the oracle-parity form (exhaustive
     # bucket membership); the sf1+ sweep runs the documented production
     # configuration (hot-bucket guard ON) via scale_sweep's
-    # PRODUCTION_MODE, same posture as minhash_dup_pairs. r10: the CC
-    # edge list is the STAR form (bucket-min edges, O(k) per bucket,
-    # connectivity-identical) — the pair list was never an output here.
+    # PRODUCTION_MODE, same posture as minhash_dup_pairs. The CC edge
+    # list is the STAR form (bucket-min edges, O(k) per bucket,
+    # connectivity-identical): the pair list is not an output here.
     edges = minhash_star_edges(
         exact, "text", "doc_id", max_bucket_size=max_bucket_size
     )
@@ -958,11 +935,120 @@ def corpus_curation_full(
         F.col("vertex").alias("doc_id")
     )
     nd = track(exact.join(losers, "doc_id", "left_anti"))
+    return _Front(s, flags, lq, exact, losers, nd)
+
+
+def _curation_report(
+    fr: _Front,
+    cut_stage: tuple[int, DataFrame, dict[str, Column]],
+    cut_outputs: list[tuple[str, int, str]],
+    kept: DataFrame,
+    tokens: str,
+) -> DataFrame:
+    """The per-source funnel both curation queries report. ``kept``
+    (doc_id, source, ``tokens``) is packed into 2048-token sequences by
+    a range-partitioned global cumsum; then ONE ``tagged_funnel``
+    aggregate reads the gate drops (tag 0), exact dups (1), near-dup
+    losers (2), the query's own ``cut_stage`` (tag 3, reported as
+    ``cut_outputs``) and the packed docs (4)."""
+    from .operators.funnel import tagged_funnel
+    from .operators.windows import global_cumsum
+
+    kpack = global_cumsum(kept, "doc_id", [tokens]).select(
+        "source",
+        tokens,
+        F.floor((F.col(f"cum_{tokens}") - 1) / 2048).cast("long").alias("pack_id"),
+    )
+    lang_ok, gopher_ok = F.col("lang_ok"), F.col("gopher_ok")
+    return tagged_funnel(
+        [
+            (
+                0,
+                fr.flags,
+                {
+                    "v2": F.when(~lang_ok, 1).otherwise(0),
+                    "v3": F.when(lang_ok & ~gopher_ok, 1).otherwise(0),
+                    "v4": F.when(lang_ok & gopher_ok & ~F.col("ppl_ok"), 1).otherwise(0),
+                },
+            ),
+            (1, fr.lq.filter("rn > 1"), {}),
+            (2, fr.exact.join(fr.losers, "doc_id"), {}),
+            cut_stage,
+            (4, kpack, {"v2": F.col(tokens), "pk": F.col("pack_id")}),
+        ],
+        [
+            ("n_docs", 0, "v1"),
+            ("n_dropped_lang", 0, "v2"),
+            ("n_dropped_gopher", 0, "v3"),
+            ("n_dropped_ppl", 0, "v4"),
+            ("n_dropped_exact", 1, "v1"),
+            ("n_dropped_neardup", 2, "v1"),
+            *cut_outputs,
+            ("n_kept", 4, "v1"),
+            ("kept_tokens", 4, "v2"),
+            ("n_packs_spanned", 4, "pk"),
+        ],
+    ).orderBy("source")
+
+
+@query("corpus_curation_full", sql=_CURATION_FULL_SQL)
+def corpus_curation_full(
+    spark: SparkSession, sf_dir: str, max_bucket_size: int | None = None
+) -> DataFrame:
+    """THE end-to-end curation benchmark: langid -> Gopher rules ->
+    bigram-LM perplexity -> exact dedup -> minhash near-dup (banded
+    LSH + connected components) -> eval-set decontamination ->
+    2048-token sequence packing, composed as ONE dataflow and reported
+    as the per-source funnel (every stage's drop count, kept docs,
+    kept tokens, packs spanned) — the first number a pretraining-
+    pipeline user asks for. The production twin is
+    ``production.curate_documents``; this registry form is fully
+    DuckDB-replayable, including the recursive-CTE connected
+    components and the md5 minhash bands.
+
+    Determinism scaffolding (test-scale honesty, same pattern as
+    ``corpus_curation``): the corpus is the md5-hash TRAIN split plus
+    injected exact duplicates (every 40th train doc under +1e6 ids —
+    the exact-dedup stage provably fires) plus injected eval clones
+    (every 3rd test doc under +2e6 ids — the decontamination stage
+    provably fires: their 5-gram overlap with the eval set is 1.0).
+
+    Scale shape: everything through near-dup removal is the shared
+    ``_curation_front`` (one-pass injected corpus; ONE flags projection
+    of fused token-stat folds, persisted — consumed by the funnel
+    aggregate and the survivor pipeline; the LM count tables,
+    vocabulary-bounded unigrams and AQE-skew-safe bigram counting;
+    STAR-form minhash edges on exact survivors, O(k) per band bucket
+    and connectivity-identical to the pair join, which this query never
+    outputs), and packing plus the
+    funnel are the shared ``_curation_report`` (range-partitioned
+    global cumsum, ONE tagged-union aggregate — no per-stage join
+    fan-in). This query's own tail is the gram-keyed decontamination
+    join: train grams never pair with docs, only with the DISTINCT
+    eval gram set. Every join key is bounded (band buckets / gram
+    vocabulary / dimension-sized source rollups); nothing is pairwise
+    on the corpus.
+    """
+    from .operators.caching import track
+    from .operators.text import punct_tokens_expr, rolling_gram_hash_sql, ws_tok_sql
+
+    is_tr = F.col("__split") == "train"
+    fr = _curation_front(
+        spark,
+        sf_dir,
+        max_bucket_size,
+        [
+            (is_tr & (F.col("doc_id") % 40 == 0), 1000000, F.col("text")),
+            ((~is_tr) & (F.col("doc_id") % 3 == 0), 2000000, F.col("text")),
+        ],
+    )
     five = F.expr(rolling_gram_hash_sql(ws_tok_sql("text"), 5, pad_short=True))
     eval_grams = (
-        s.filter(F.col("__split") == "test").select(F.explode(five).alias("tgram")).distinct()
+        fr.split.filter(F.col("__split") == "test")
+        .select(F.explode(five).alias("tgram"))
+        .distinct()
     )
-    ngr = nd.select("doc_id", F.explode(five).alias("gram"))
+    ngr = fr.nd.select("doc_id", F.explode(five).alias("gram"))
     contam = (
         ngr.join(eval_grams, F.col("gram") == F.col("tgram"), "left")
         .groupBy("doc_id")
@@ -971,78 +1057,17 @@ def corpus_curation_full(
     dropc = track(
         contam.filter(F.col("n_o") * 1.0 / F.col("n_g") >= 0.5).select("doc_id")
     )
-    kept = nd.join(dropc, "doc_id", "left_anti")
-    ktok = kept.select(
+    kept = fr.nd.join(dropc, "doc_id", "left_anti").select(
         "doc_id",
         "source",
         F.size(punct_tokens_expr(F.col("text"))).cast("long").alias("n_tokens"),
     )
-    kpack = global_cumsum(ktok, "doc_id", ["n_tokens"]).select(
-        "source",
+    return _curation_report(
+        fr,
+        (3, fr.nd.join(dropc, "doc_id"), {}),
+        [("n_dropped_contam", 3, "v1")],
+        kept,
         "n_tokens",
-        F.floor((F.col("cum_n_tokens") - 1) / 2048).cast("long").alias("pack_id"),
-    )
-    # funnel tail (r10): ONE aggregate over a tagged union of the five
-    # stage frames replaces five per-source aggregates + four broadcast
-    # left joins — same values (every later stage's sources are a
-    # subset of flags', so the group-key set is unchanged, and sums
-    # over absent tags are NULL -> coalesce 0 exactly like the old
-    # left-join NULLs). One exchange on `source` instead of five.
-    one, zero = F.lit(1).cast("long"), F.lit(0).cast("long")
-    nul = F.lit(None).cast("long")
-
-    def _stage(df_, st, v1=one, v2=zero, v3=zero, v4=zero, pk=nul):
-        return df_.select(
-            "source",
-            F.lit(st).alias("__st"),
-            v1.cast("long").alias("__v1"),
-            v2.cast("long").alias("__v2"),
-            v3.cast("long").alias("__v3"),
-            v4.cast("long").alias("__v4"),
-            pk.cast("long").alias("__pk"),
-        )
-
-    u = (
-        _stage(
-            flags,
-            0,
-            v2=F.when(~F.col("lang_ok"), 1).otherwise(0),
-            v3=F.when(F.col("lang_ok") & ~F.col("gopher_ok"), 1).otherwise(0),
-            v4=F.when(
-                F.col("lang_ok") & F.col("gopher_ok") & ~F.col("ppl_ok"), 1
-            ).otherwise(0),
-        )
-        .unionByName(_stage(lq.filter("rn > 1"), 1))
-        .unionByName(_stage(exact.join(losers, "doc_id"), 2))
-        .unionByName(_stage(nd.join(dropc, "doc_id"), 3))
-        .unionByName(_stage(kpack, 4, v2=F.col("n_tokens"), pk=F.col("pack_id")))
-    )
-    st = F.col("__st")
-
-    def _sum(stage, col, name):
-        return (
-            F.coalesce(F.sum(F.when(st == stage, F.col(col))), zero)
-            .cast("long")
-            .alias(name)
-        )
-
-    return (
-        u.groupBy("source")
-        .agg(
-            _sum(0, "__v1", "n_docs"),
-            _sum(0, "__v2", "n_dropped_lang"),
-            _sum(0, "__v3", "n_dropped_gopher"),
-            _sum(0, "__v4", "n_dropped_ppl"),
-            _sum(1, "__v1", "n_dropped_exact"),
-            _sum(2, "__v1", "n_dropped_neardup"),
-            _sum(3, "__v1", "n_dropped_contam"),
-            _sum(4, "__v1", "n_kept"),
-            _sum(4, "__v2", "kept_tokens"),
-            F.countDistinct(F.when(st == 4, F.col("__pk")))
-            .cast("long")
-            .alias("n_packs_spanned"),
-        )
-        .orderBy("source")
     )
 
 
@@ -1256,132 +1281,40 @@ def corpus_curation_surgical(
     2 docs cut to zero), and the oracle replays whatever the data
     yields at every scale.
 
-    Scale shape: identical to ``corpus_curation_full`` through the
-    near-dup stage (one-pass injected corpus, one persisted flags
-    projection, vocabulary-bounded LM tables, star-form minhash edges
-    with the parametrized ``max_bucket_size`` production guard, one
-    tagged-union funnel aggregate). The surgical stage adds the two span plans the
-    wave-10/11 queries already audited (anchor-complement islands — no
-    gram self-join; broadcastable eval gram set semi-join) plus a
-    doc-partitioned interval-union window over the CUT LISTS (two rows
-    per span, nowhere near corpus-sized) and the same range-partitioned
-    packing cumsum. The DuckDB oracle replays all of it, including the
-    recursive-CTE connected components and the interval union.
+    Scale shape: the shared ``_curation_front`` through the near-dup
+    stage and the shared ``_curation_report`` for packing and the
+    funnel (see ``corpus_curation_full``). The surgical stage adds the
+    two span plans the wave-10/11 queries already audited
+    (anchor-complement islands — no gram self-join; broadcastable eval
+    gram set semi-join) plus a doc-partitioned interval-union window
+    over the CUT LISTS (two rows per span, nowhere near corpus-sized).
+    The DuckDB oracle replays all of it, including the recursive-CTE
+    connected components and the interval union.
     """
     from pyspark.sql import Window
 
     from .operators.caching import track
-    from .operators.dedup_fuzzy import (
-        duplicated_span_extents,
-        minhash_star_edges,
-    )
-    from .operators.graph import connected_components
-    from .operators.sampling import hash_split_expr
-    from .operators.text import (
-        alnum_token_stats_expr,
-        bigram_lm_perplexity,
-        langid_expr,
-        punct_ratio_expr,
-        punct_tok_sql,
-        punct_tokens_expr,
-        rolling_gram_hash_sql,
-        ws_token_stats_expr,
-    )
-    from .operators.windows import global_cumsum, merge_intervals
+    from .operators.dedup_fuzzy import duplicated_span_extents
+    from .operators.text import punct_tok_sql, punct_tokens_expr, rolling_gram_hash_sql
+    from .operators.windows import merge_intervals
 
-    d = spread_for_compute(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text", "source", "lang")
-    )
-    s = d.select("*", hash_split_expr("doc_id").alias("__split"))
-    test = s.filter(F.col("__split") == "test").drop("__split")
-    # one-pass injection (r10, same rewrite as corpus_curation_full):
-    # each doc explodes into its 0-2 corpus copies (train row +
-    # every-40th train dup +1e6 + every-6th test clone +2e6 + chimera
-    # +3e6) instead of the old 4-branch union — that union re-evaluated
-    # the scan+split per branch and multiplied the spread partitioning
-    # by the branch count (4x32 = 128 map tasks over 4,393 docs at
-    # sf0.1; at 100 TB, 4 corpus scans instead of 1). Same multiset.
     is_tr = F.col("__split") == "train"
-    copies = F.array(
-        F.when(is_tr, F.struct(F.col("doc_id"), F.col("text"))),
-        F.when(
-            is_tr & (F.col("doc_id") % 40 == 0),
-            F.struct((F.col("doc_id") + 1000000).alias("doc_id"), F.col("text")),
-        ),
-        F.when(
-            (~is_tr) & (F.col("doc_id") % 6 == 0),
-            F.struct((F.col("doc_id") + 2000000).alias("doc_id"), F.col("text")),
-        ),
-        F.when(
-            (~is_tr) & (F.col("doc_id") % 6 == 3),
-            F.struct(
-                (F.col("doc_id") + 3000000).alias("doc_id"),
-                F.expr("concat(text, ' ', substring(text, 1, 400))").alias("text"),
+    fr = _curation_front(
+        spark,
+        sf_dir,
+        max_bucket_size,
+        [
+            (is_tr & (F.col("doc_id") % 40 == 0), 1000000, F.col("text")),
+            ((~is_tr) & (F.col("doc_id") % 6 == 0), 2000000, F.col("text")),
+            (
+                (~is_tr) & (F.col("doc_id") % 6 == 3),
+                3000000,
+                F.expr("concat(text, ' ', substring(text, 1, 400))"),
             ),
-        ),
+        ],
     )
-    corpus = track(
-        s.select(
-            "source",
-            "lang",
-            F.explode(F.filter(copies, lambda c: c.isNotNull())).alias("__c"),
-        ).select(
-            F.col("__c.doc_id").alias("doc_id"),
-            F.col("__c.text").alias("text"),
-            "source",
-            "lang",
-        )
-    )
-    ppl = bigram_lm_perplexity(corpus, "text", "doc_id", keep_threshold=31.0).select(
-        "doc_id", "keep"
-    )
-    base = corpus.select(
-        "doc_id",
-        "source",
-        "lang",
-        "text",
-        ws_token_stats_expr("text").alias("__ws"),
-        alnum_token_stats_expr("text").alias("__al"),
-        punct_ratio_expr("text").alias("__punct"),
-        langid_expr("text").alias("__lg"),
-        F.md5("text").alias("__digest"),
-    )
-    mwl = F.when(
-        F.col("__al.n") > 0, F.col("__al.len") / F.col("__al.n").cast("double")
-    ).otherwise(F.lit(0.0))
-    gopher_ok = (
-        F.col("__ws.n").between(50, 100000)
-        & mwl.between(3.0, 10.0)
-        & (F.col("__ws.stop") >= 2)
-        & (F.col("__punct") <= 0.1)
-    )
-    flags = track(
-        base.select(
-            "doc_id",
-            "source",
-            "text",
-            "__digest",
-            (F.col("__lg") == F.col("lang")).alias("lang_ok"),
-            gopher_ok.alias("gopher_ok"),
-        )
-        .join(ppl, "doc_id")
-        .withColumn("ppl_ok", F.col("keep") == 1)
-        .drop("keep")
-    )
-    lq = flags.filter("lang_ok AND gopher_ok AND ppl_ok").withColumn(
-        "rn", F.row_number().over(Window.partitionBy("__digest").orderBy("doc_id"))
-    )
-    exact = track(lq.filter("rn = 1").select("doc_id", "source", "text"))
-    # star-form CC edges (r10): connectivity-identical, O(k) per band
-    # bucket — the pair list is not an output of this query
-    edges = minhash_star_edges(
-        exact, "text", "doc_id", max_bucket_size=max_bucket_size
-    )
-    cc = connected_components(edges, "id_a", "id_b")
-    losers = cc.filter(F.col("vertex") != F.col("component")).select(
-        F.col("vertex").alias("doc_id")
-    )
-    nd = track(exact.join(losers, "doc_id", "left_anti"))
+    nd = fr.nd
+    test = fr.split.filter(F.col("__split") == "test").drop("__split")
     # --- surgical stage: two cut lists over the same punct tokenization ---
     dspan = track(
         duplicated_span_extents(
@@ -1456,82 +1389,26 @@ def corpus_curation_surgical(
     kept = perdoc.filter(F.col("n_tokens") - F.col("cut") > 0).select(
         "doc_id", "source", (F.col("n_tokens") - F.col("cut")).cast("long").alias("kt")
     )
-    kpack = global_cumsum(kept, "doc_id", ["kt"]).select(
-        "source", "kt", F.floor((F.col("cum_kt") - 1) / 2048).cast("long").alias("pack_id")
-    )
-    # funnel tail (r10, same rewrite as corpus_curation_full): ONE
-    # aggregate over a tagged union of the five stage frames replaces
-    # five per-source aggregates + four broadcast left joins — same
-    # values (later stages' sources are subsets of flags', sums over
-    # absent tags are NULL -> coalesce 0 exactly like the old
-    # left-join NULLs). One exchange on `source` instead of five.
-    one = F.lit(1).cast("long")
-    nul = F.lit(None).cast("long")
-
-    def _stage(df_, st, v1=one, v2=zero, v3=zero, v4=zero, pk=nul):
-        return df_.select(
-            "source",
-            F.lit(st).alias("__st"),
-            v1.cast("long").alias("__v1"),
-            v2.cast("long").alias("__v2"),
-            v3.cast("long").alias("__v3"),
-            v4.cast("long").alias("__v4"),
-            pk.cast("long").alias("__pk"),
-        )
-
-    u = (
-        _stage(
-            flags,
-            0,
-            v2=F.when(~F.col("lang_ok"), 1).otherwise(0),
-            v3=F.when(F.col("lang_ok") & ~F.col("gopher_ok"), 1).otherwise(0),
-            v4=F.when(
-                F.col("lang_ok") & F.col("gopher_ok") & ~F.col("ppl_ok"), 1
-            ).otherwise(0),
-        )
-        .unionByName(_stage(lq.filter("rn > 1"), 1))
-        .unionByName(_stage(exact.join(losers, "doc_id"), 2))
-        .unionByName(
-            _stage(
-                perdoc,
-                3,
-                v1=F.col("cut_dup"),
-                v2=F.col("cut_contam"),
-                v3=F.col("cut"),
-                v4=F.when(F.col("n_tokens") - F.col("cut") <= 0, 1).otherwise(0),
-            )
-        )
-        .unionByName(_stage(kpack, 4, v2=F.col("kt"), pk=F.col("pack_id")))
-    )
-    st = F.col("__st")
-
-    def _sum(stage, col, name):
-        return (
-            F.coalesce(F.sum(F.when(st == stage, F.col(col))), zero)
-            .cast("long")
-            .alias(name)
-        )
-
-    return (
-        u.groupBy("source")
-        .agg(
-            _sum(0, "__v1", "n_docs"),
-            _sum(0, "__v2", "n_dropped_lang"),
-            _sum(0, "__v3", "n_dropped_gopher"),
-            _sum(0, "__v4", "n_dropped_ppl"),
-            _sum(1, "__v1", "n_dropped_exact"),
-            _sum(2, "__v1", "n_dropped_neardup"),
-            _sum(3, "__v1", "tokens_cut_dup"),
-            _sum(3, "__v2", "tokens_cut_contam"),
-            _sum(3, "__v3", "tokens_cut"),
-            _sum(3, "__v4", "n_dropped_cut"),
-            _sum(4, "__v1", "n_kept"),
-            _sum(4, "__v2", "kept_tokens"),
-            F.countDistinct(F.when(st == 4, F.col("__pk")))
-            .cast("long")
-            .alias("n_packs_spanned"),
-        )
-        .orderBy("source")
+    return _curation_report(
+        fr,
+        (
+            3,
+            perdoc,
+            {
+                "v1": F.col("cut_dup"),
+                "v2": F.col("cut_contam"),
+                "v3": F.col("cut"),
+                "v4": F.when(F.col("n_tokens") - F.col("cut") <= 0, 1).otherwise(0),
+            },
+        ),
+        [
+            ("tokens_cut_dup", 3, "v1"),
+            ("tokens_cut_contam", 3, "v2"),
+            ("tokens_cut", 3, "v3"),
+            ("n_dropped_cut", 3, "v4"),
+        ],
+        kept,
+        "kt",
     )
 
 

@@ -627,6 +627,7 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle, no UDF)."""
     from .operators.text import (
         alnum_token_stats_expr,
+        gopher_rules,
         punct_ratio_expr,
         ws_token_stats_expr,
     )
@@ -642,22 +643,10 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         alnum_token_stats_expr("text").alias("__al"),
         punct_ratio_expr("text").alias("__punct"),
     )
-    n_words = F.col("__ws.n")
-    mwl = F.when(
-        F.col("__al.n") > 0, F.col("__al.len") / F.col("__al.n").cast("double")
-    ).otherwise(F.lit(0.0))
-    wc_ok = n_words.between(50, 100000)
-    mwl_ok = mwl.between(3.0, 10.0)
-    stop_ok = F.col("__ws.stop") >= 2
-    punct_ok = F.col("__punct") <= 0.1
     return base.select(
         "doc_id",
-        n_words.alias("n_words"),
-        wc_ok.alias("wc_ok"),
-        mwl_ok.alias("mwl_ok"),
-        stop_ok.alias("stop_ok"),
-        punct_ok.alias("punct_ok"),
-        (wc_ok & mwl_ok & stop_ok & punct_ok).alias("passes_gopher"),
+        F.col("__ws.n").alias("n_words"),
+        *[rule.alias(name) for name, rule in gopher_rules().items()],
     )
 
 

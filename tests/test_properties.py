@@ -94,6 +94,31 @@ def test_stratified_split_preserves_ratio(spark, seed):
         assert 0.1 < ratio < 0.3  # population ratio 0.2 ± sampling noise
 
 
+def test_stratified_split_ignores_row_order_and_partitioning(spark):
+    from pyspark.ml.feature import VectorAssembler
+
+    from classification_pyspark_spark.operators.sampling import stratified_split
+
+    df = spark.range(0, 600).select(
+        F.col("id"), (F.col("id") % 5 == 0).cast("int").alias("y"), (F.col("id") % 7).alias("g")
+    )
+    # duplicate rows and a vector column (left out of the draw)
+    df = VectorAssembler(inputCols=["g"], outputCol="v").transform(
+        df.unionByName(df.filter(F.col("id") < 40))
+    )
+
+    def sides(frame):
+        train, test = stratified_split(frame, "y", 0.3, seed=11)
+        return sorted(r.id for r in train.collect()), sorted(r.id for r in test.collect())
+
+    a = sides(df.coalesce(1))
+    b = sides(df.orderBy(F.desc("id")).repartition(7))
+    assert a == b
+    train_ids, test_ids = a
+    assert len(train_ids) + len(test_ids) == 640
+    assert not set(train_ids) & set(test_ids)  # identical rows share a side
+
+
 @given(text=st.text(alphabet="ab cd", min_size=10, max_size=60))
 @settings(**SETTINGS)
 def test_minhash_identical_texts_share_signature(spark, text):

@@ -47,6 +47,9 @@ def main() -> int:
             "spark.eventLog.dir": f"file://{evdir}",
         },
     )
+    if spark.sparkContext.getConf().get("spark.eventLog.enabled", "false") != "true":
+        # getOrCreate reuses a running session, whose conf wins
+        raise SystemExit("job_profile: the Spark session has no event log enabled")
     fn = QUERIES[args.query]
     # warm-up: same plan shape at sf0.001 pays codegen/JIT. Job
     # descriptions are thread-local and inherited by EVERY job the rep
@@ -72,6 +75,8 @@ def main() -> int:
     time.sleep(1.0)
 
     logs = sorted(glob.glob(f"{evdir}/*"), key=os.path.getmtime)
+    if not logs:
+        raise SystemExit(f"job_profile: no event log was written under {evdir}")
     latest = logs[-1]
     if os.path.isdir(latest):
         # Spark 4 event-log v2 layout: a directory of events_<n>_* files
